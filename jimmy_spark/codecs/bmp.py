@@ -34,5 +34,13 @@ def decode(data: bytes) -> np.ndarray:
     stride = (w * 3 + 3) & ~3
     raw = np.frombuffer(data, dtype=np.uint8, count=h * stride, offset=offset)
     rows = raw.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-    out = rows[:, :, ::-1]  # BGR -> RGB
-    return (out[::-1] if flip else out).copy()
+    if flip:
+        rows = rows[::-1]
+    # BGR -> RGB as three strided channel copies into one fresh array:
+    # copying the reversed-channel view (``rows[:, :, ::-1]``) instead
+    # made the whole decode of a 64x48 image about twice as slow
+    out = np.empty((h, w, 3), dtype=np.uint8)
+    out[:, :, 0] = rows[:, :, 2]
+    out[:, :, 1] = rows[:, :, 1]
+    out[:, :, 2] = rows[:, :, 0]
+    return out

@@ -21,22 +21,26 @@ from pyspark.sql import DataFrame
 
 from jimmy_spark.codecs import decode_image
 
-# Per-task content-addressed cache discipline shared with the fused map
-# (operators/fused.py): every output of the per-row kernels below is a
+# Per-task content-addressed cache discipline, shared by every blob
+# kernel (fused map, decode, features, fingerprints): each output is a
 # pure function of (fmt, bytes), so identical blobs pay decode+features
-# once per task instead of once per row (measured 4-6x blob duplication
-# in web-scale corpora and in the bench/curate fixtures). Keys are
-# (fmt, blake2b-128(bytes)) — 16-byte digests, never the blobs, so the
-# cache holds ~100 bytes/entry regardless of image size; cleared at cap.
+# once per task instead of once per row. Keys are (fmt, SHA-256(bytes)
+# truncated to 16 bytes) — never the blobs themselves, which would pin up
+# to _CACHE_CAP full images (and their Arrow batch buffers) in executor
+# memory. An entry stays ~100 bytes whatever the image size, 128-bit
+# collision odds are negligible at any corpus size, and the dict is
+# cleared at the cap. SHA-256 over blake2b: with the SHA extensions
+# OpenSSL hashes a 3.4 KB blob in about half the time.
 _CACHE_CAP = 65536
 
 
 def blob_key(fmt, blob) -> tuple:
-    """(fmt, digest) cache key; NULL blobs key on a sentinel so the
-    decode path's usual error row is cached/replayed like any other."""
+    """(fmt, digest) cache key over any bytes-like blob (bytes or an
+    Arrow buffer memoryview); NULL blobs key on a sentinel so the decode
+    path's usual error row is cached/replayed like any other."""
     if blob is None:
         return (fmt, None)
-    return (fmt, hashlib.blake2b(blob, digest_size=16).digest())
+    return (fmt, hashlib.sha256(blob).digest()[:16])
 
 
 def cached_blob_fn(cache: dict | None, fmt, blob, fn):

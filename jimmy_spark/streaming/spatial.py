@@ -40,7 +40,7 @@ def spatial_ingest_stream(
 ) -> DataFrame:
     """Streaming DataFrame: fused spatial enrichment over arriving files.
 
-    The fused stage is stateless (mapInPandas + closure-broadcast R-tree),
+    The fused stage is stateless (mapInArrow + closure-broadcast R-tree),
     so it composes with a streaming source unchanged — one definition
     serves batch job, bench, and stream (no semantic twin to drift).
     """

@@ -3,10 +3,13 @@ lossless exact, lossy PSNR >= 40 dB)."""
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import numpy as np
 import pytest
 
-from jimmy_spark.codecs import decode_image, encode_image
+from jimmy_spark.codecs import bmp, decode_image, encode_image
 from jimmy_spark.codecs.registry import FORMATS, LOSSLESS
 
 
@@ -36,6 +39,47 @@ def test_truncated_raises():
         data = encode_image(arr, fmt)
         with pytest.raises(ValueError):
             decode_image(data[: len(data) // 2], fmt)
+
+
+def _bmp_top_down(data: bytes) -> bytes:
+    """Rewrite a bottom-up BMP as the equivalent top-down one (negative
+    height, rows stored first-to-last)."""
+    (offset,) = struct.unpack_from("<I", data, 10)
+    w, h = struct.unpack_from("<ii", data, 18)
+    stride = (w * 3 + 3) & ~3
+    rows = np.frombuffer(data, np.uint8, count=h * stride, offset=offset)
+    head = bytearray(data[:offset])
+    struct.pack_into("<i", head, 22, -h)
+    return bytes(head) + rows.reshape(h, stride)[::-1].tobytes()
+
+
+def _bmp_decode_reversed_view(data: bytes) -> np.ndarray:
+    """The reversed-channel-view formulation ``bmp.decode`` replaced."""
+    (offset,) = struct.unpack_from("<I", data, 10)
+    w, h = struct.unpack_from("<ii", data, 18)
+    flip = h > 0
+    h = abs(h)
+    stride = (w * 3 + 3) & ~3
+    raw = np.frombuffer(data, dtype=np.uint8, count=h * stride, offset=offset)
+    out = raw.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)[:, :, ::-1]
+    return (out[::-1] if flip else out).copy()
+
+
+@pytest.mark.parametrize("top_down", [False, True])
+@pytest.mark.parametrize("w", range(1, 8))
+def test_bmp_decode_bit_identical_to_reversed_view(w, top_down):
+    """Per-channel copies == the old ``[:, :, ::-1]`` view, byte for
+    byte, for every stride padding (w mod 4) and both row orders."""
+    arr = _img(300 + w, w, 5)
+    data = bmp.encode(arr)
+    if top_down:
+        data = _bmp_top_down(data)
+    got = bmp.decode(data)
+    ref = _bmp_decode_reversed_view(data)
+    assert got.dtype == np.uint8 and got.flags.c_contiguous
+    np.testing.assert_array_equal(got, ref)
+    np.testing.assert_array_equal(got, arr)
+    assert zlib.crc32(got) == zlib.crc32(ref) == zlib.crc32(arr.tobytes())
 
 
 def test_wrong_fmt_raises():
